@@ -58,7 +58,6 @@ from datacurator_jl_spark.registry import (
     compile_metric,
 )
 
-WORDS_COL = "_dc_words"
 STATS_COL = "_dc_stats"
 REP_COL = "_dc_rep"
 CLS_COL = "_dc_cls"
@@ -347,11 +346,12 @@ class CurationResult:
 class Pipeline:
     """Compiled recipe. ``apply(df)`` adds decision/transform columns."""
 
-    def __init__(self, spec: RecipeSpec, arrow_stats: bool = True):
+    #: the shared ``_dc_stats`` struct is always the Arrow twin (a constant,
+    #: not an option: perfbench/spans.py reads it to mirror the projection)
+    arrow_stats = True
+
+    def __init__(self, spec: RecipeSpec):
         self.spec = spec
-        # Arrow-vectorized token stats (default) vs the pure-JVM fold;
-        # identical values (tested), different physical strategy.
-        self.arrow_stats = arrow_stats
 
     def _ctx(self, df: DataFrame, row_count: int | None = None) -> RuleContext:
         return RuleContext(
@@ -360,7 +360,6 @@ class Pipeline:
             html_col=self.spec.html_col if (self.spec.html_col in df.columns) else None,
             available_cols=df.columns,
             spec=self.spec,
-            words_col=WORDS_COL if WORDS_COL in df.columns else None,
             stats_col=STATS_COL if STATS_COL in df.columns else None,
             rep_col=REP_COL if REP_COL in df.columns else None,
             cls_col=CLS_COL if CLS_COL in df.columns else None,
@@ -713,36 +712,27 @@ class Pipeline:
                     spec.mixture_total,
                 ).select(*cols)
             df = df.localCheckpoint(eager=False)
-        # Pre-project the tokenization and token-stats fold ONCE: every
-        # word-based rule then reads these shared columns. Catalyst keeps
-        # the projections separate (CollapseProject refuses to inline a
-        # non-cheap alias referenced many times), whole-stage codegen
-        # fuses them into one pass, and if no rule references them they
-        # are column-pruned away entirely. Measured ~3x over re-deriving
-        # the split/stats inside each rule (conditional CASE branches get
-        # no codegen subexpression elimination).
-        from datacurator_jl_spark.functions import text as X
-
+        # Pre-project the token-stats struct ONCE: every word-based rule
+        # then reads this shared column. Catalyst keeps the projection
+        # separate (CollapseProject refuses to inline a non-cheap alias
+        # referenced many times), and if no rule references it it is
+        # column-pruned away entirely. Measured ~3x over re-deriving the
+        # split/stats inside each rule (conditional CASE branches get no
+        # codegen subexpression elimination).
         input_cols = list(df.columns)
         if spec.text_col in df.columns:
             tcol = F.col(spec.text_col)
-            if self.arrow_stats:
-                # Arrow path: the native HOF fold is interpreted
-                # (CodegenFallback) and anti-scales on a shared heap;
-                # the pandas/Arrow twin runs in per-core worker processes
-                # (functions/arrow_stats.py) and carries ALL word-derived
-                # stats (nw/nd/set counts), so the JVM never splits the
-                # text at all — no words array is materialized.
-                from datacurator_jl_spark.functions.arrow_stats import (
-                    token_stats_arrow,
-                )
+            # Arrow stats: the native HOF fold (text.token_stats) is
+            # interpreted (CodegenFallback) and anti-scales on a shared
+            # heap; the pandas/Arrow twin runs in per-core worker
+            # processes (functions/arrow_stats.py) and carries ALL
+            # word-derived stats (nw/nd/set counts), so the JVM never
+            # splits the text at all — no words array is materialized.
+            from datacurator_jl_spark.functions.arrow_stats import (
+                token_stats_arrow,
+            )
 
-                df = df.withColumn(STATS_COL, token_stats_arrow(tcol))
-            else:
-                # JVM path: LOWERCASED words (split commutes with lower)
-                # shared by the stats fold and any array-needing rule
-                df = df.withColumn(WORDS_COL, X.words(F.lower(tcol)))
-                df = df.withColumn(STATS_COL, X.token_stats(tcol, F.col(WORDS_COL)))
+            df = df.withColumn(STATS_COL, token_stats_arrow(tcol))
             # Repetition struct (functions/rep_stats.py): ONE extra Arrow
             # pass, pre-projected only when a repetition rule exists —
             # recipes that never mention repetition pay nothing.

@@ -12,8 +12,8 @@ processes with C-backed pandas/numpy ops.
 Semantics are PINNED IDENTICAL to the native exprs in operators/dedup.py
 and the DuckDB oracles:
 
-- token list = ASCII ``\\S+`` over ``lower(text)`` (functions/text.words),
-  de-duplicated;
+- token list = ASCII ``\\S+`` over ``lower(text)`` (functions/tokens.py,
+  the Python twin of functions/text.words), de-duplicated;
 - minhash lane i of word w = first 8 md5 hex chars of ``w + '#i'`` as a
   64-bit int (the portable ``_h32`` contract);
 - simhash word hash = first 15 md5 hex chars (60 bits); bit j of the
@@ -22,27 +22,21 @@ and the DuckDB oracles:
   shrink before Jaccard joins).
 
 md5 per *distinct* word is amortized by a module-level word -> lanes
-cache (web-text vocabulary is Zipfian: the cache hit rate dominates);
-the python-level loop touches only batch-NEW words.
+LRU cache (``tokens.lru_map``; web-text vocabulary is Zipfian: the cache
+hit rate dominates); md5 runs only for batch-NEW words.
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
-import re
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pa_compute
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)  # pinned: text.words semantics
-
-_CACHE_CAP = 4_000_000  # per-worker memory bound per (fn, config) cache
+from datacurator_jl_spark.functions.tokens import distinct_pairs, lru_map, token_codes
 
 # word -> np.int64[k] of minhash lanes, per k
 _MH_CACHES: dict[int, dict[str, np.ndarray]] = {}
@@ -50,29 +44,6 @@ _MH_CACHES: dict[int, dict[str, np.ndarray]] = {}
 _SH_CACHES: dict[int, dict[str, np.ndarray]] = {}
 # word -> h32 int
 _H32_CACHE: dict[str, int] = {}
-
-
-def _lru_get(cache: dict, key: str):
-    """Cache lookup that refreshes recency: python dicts are
-    insertion-ordered, so re-inserting a hit moves it to the back and
-    eviction from the front becomes least-recently-USED, not merely
-    least-recently-inserted."""
-    v = cache.get(key)
-    if v is not None:
-        del cache[key]
-        cache[key] = v
-    return v
-
-
-def _lru_evict(cache: dict) -> None:
-    """Evict from the front (least recent) down to 3/4 of the cap —
-    smooth recency eviction instead of the round-2 clear-all valve, which
-    dropped the whole Zipf head (hundreds of MB re-hashed) at once."""
-    if len(cache) <= _CACHE_CAP:
-        return
-    drop = len(cache) - (_CACHE_CAP * 3) // 4
-    for k in list(itertools.islice(iter(cache), drop)):
-        del cache[k]
 
 
 def _md5_prefix_int(data: bytes, nhex: int) -> int:
@@ -83,56 +54,26 @@ def _distinct_token_codes(
     texts: pd.Series,
 ) -> tuple[np.ndarray, np.ndarray, list[str]]:
     """(rows, codes, uniques): the distinct (row, token) pairs over
-    lower(text) ``\\S+`` tokens, as int arrays + the unique-token list.
-
-    Round-7 shape (guide §4.2, same pattern as arrow_stats): Arrow
-    ``ascii_split_whitespace`` + ``dictionary_encode`` replace the
-    per-row ``re.findall`` + object ``explode`` + string
-    ``drop_duplicates`` (~8x on the tokenize+code step). Arrow's
-    splitter emits EMPTY strings at leading/trailing-whitespace
-    boundaries — a real ``\\S+`` match can never be empty, so dropping
-    empties restores the exact match list (pinned by the arrow_stats
-    edge-case test; both kernels share the splitter semantics).
-    ``rows`` are batch POSITIONS 0..n-1; pair-distinctness via unique
-    (row, code) keys — integer work, no string re-hash."""
-    low = texts.fillna("").str.lower()
-    toks = pa_compute.ascii_split_whitespace(pa.Array.from_pandas(low))
-    flat = pa_compute.list_flatten(toks)
-    lens = pa_compute.list_value_length(toks).to_numpy(zero_copy_only=False)
-    rows = np.repeat(np.arange(len(texts), dtype=np.int64), lens)
-    nonempty = np.asarray(pa_compute.not_equal(flat, ""))
-    if not nonempty.all():
-        flat = flat.filter(pa.array(nonempty))
-        rows = rows[nonempty]
-    if len(flat) == 0:
-        return rows[:0], rows[:0], []
-    enc = pa_compute.dictionary_encode(flat)
-    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniques = enc.dictionary.to_pylist()
-    nu = len(uniques)
-    pk = np.unique(rows * nu + codes)
-    return pk // nu, pk % nu, uniques
+    lower(text) ``\\S+`` tokens (functions/tokens.py)."""
+    rows, codes, uniques = token_codes(texts)
+    return (*distinct_pairs(rows, codes, len(uniques)), uniques)
 
 
 def _minhash_batch(texts: pd.Series, k: int) -> pd.DataFrame:
-    cache = _MH_CACHES.setdefault(k, {})
-    _lru_evict(cache)
     rows, codes, uniques = _distinct_token_codes(texts)
     cols = [f"mh{i}" for i in range(k)]
     if not uniques:
         out = pd.DataFrame(index=texts.index, columns=cols, dtype="float64")
         return out.astype("Int64")
-    lanes = np.empty((len(uniques), k), dtype=np.int64)
     salts = [f"#{i}".encode() for i in range(k)]
-    for ui, w in enumerate(uniques):
-        v = _lru_get(cache, w)
-        if v is None:
-            wb = w.encode("utf-8")
-            v = np.fromiter(
-                (_md5_prefix_int(wb + s, 8) for s in salts), dtype=np.int64, count=k
-            )
-            cache[w] = v
-        lanes[ui] = v
+
+    def lanes_of(w: str) -> np.ndarray:
+        wb = w.encode("utf-8")
+        return np.fromiter(
+            (_md5_prefix_int(wb + s, 8) for s in salts), dtype=np.int64, count=k
+        )
+
+    lanes = np.array(lru_map(_MH_CACHES.setdefault(k, {}), uniques, lanes_of))
     per_pair = pd.DataFrame(lanes[codes], columns=cols)
     mins = per_pair.groupby(rows).min()
     # rows with no tokens (empty/whitespace/null text) -> null signature,
@@ -144,21 +85,17 @@ def _minhash_batch(texts: pd.Series, k: int) -> pd.DataFrame:
 
 
 def _simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
-    cache = _SH_CACHES.setdefault(bits, {})
-    _lru_evict(cache)
     rows, codes, uniques = _distinct_token_codes(texts)
     out = pd.Series(0, index=texts.index, dtype="int64")
     if not uniques:
         return out
-    contrib = np.empty((len(uniques), bits), dtype=np.int64)
     jidx = np.arange(bits)
-    for ui, w in enumerate(uniques):
-        v = _lru_get(cache, w)
-        if v is None:
-            h = _md5_prefix_int(w.encode("utf-8"), 15)  # 60-bit word hash
-            v = (((h >> jidx) & 1) * 2 - 1).astype(np.int64)
-            cache[w] = v
-        contrib[ui] = v
+
+    def contrib_of(w: str) -> np.ndarray:
+        h = _md5_prefix_int(w.encode("utf-8"), 15)  # 60-bit word hash
+        return (((h >> jidx) & 1) * 2 - 1).astype(np.int64)
+
+    contrib = np.array(lru_map(_SH_CACHES.setdefault(bits, {}), uniques, contrib_of))
     sums = pd.DataFrame(contrib[codes]).groupby(rows).sum()
     packed = (sums.values > 0) @ (1 << jidx)
     # groupby keys are batch positions — assign positionally
@@ -167,33 +104,27 @@ def _simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
 
 
 def _h32_wordset_batch(texts: pd.Series) -> pd.Series:
-    _lru_evict(_H32_CACHE)
-    toks = texts.str.lower().str.findall(_TOKEN_RE)
-    # touch the LRU once per batch-UNIQUE word (like the minhash path) —
-    # recency refresh per token OCCURRENCE would triple dict ops in the
-    # hottest loop; the per-row loop below reads a plain local dict
-    ex = toks.explode().dropna()
-    local: dict[str, int] = {}
-    for w in (pd.unique(ex) if not ex.empty else ()):  # noqa: B020
-        h = _lru_get(_H32_CACHE, w)
-        if h is None:
-            h = _md5_prefix_int(w.encode("utf-8"), 8)
-            _H32_CACHE[w] = h
-        local[w] = h
-
-    def row_set(ws):
-        if ws is None or (isinstance(ws, float) and pd.isna(ws)):
-            return None
-        seen = []
-        have = set()
-        for w in ws:
-            h = local[w]
-            if h not in have:
-                have.add(h)
-                seen.append(h)
-        return seen
-
-    return toks.map(row_set, na_action="ignore")
+    """Per doc, the distinct ``_h32`` word hashes in first-occurrence
+    order; null text -> null, no tokens -> []."""
+    rows, codes, uniques = token_codes(texts)
+    h = np.array(
+        lru_map(_H32_CACHE, uniques, lambda w: _md5_prefix_int(w.encode("utf-8"), 8)),
+        dtype=np.int64,
+    )[codes]
+    # first occurrence of each (row, hash) — h < 2**32 — in document order
+    _, first = np.unique(rows * (1 << 32) + h, return_index=True)
+    first.sort()
+    bounds = np.searchsorted(rows[first], np.arange(len(texts) + 1))
+    vals = h[first]
+    null = texts.isna().to_numpy()
+    return pd.Series(
+        [
+            None if null[i] else vals[bounds[i] : bounds[i + 1]].tolist()
+            for i in range(len(texts))
+        ],
+        index=texts.index,
+        dtype=object,
+    )
 
 
 def minhash_struct_arrow(text: Column, k: int) -> Column:

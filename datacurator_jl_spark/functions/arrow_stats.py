@@ -16,8 +16,6 @@ arrow == native on the synthetic corpus.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -26,14 +24,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacurator_jl_spark.functions.arrow_hash import _CACHE_CAP, _lru_evict
 from datacurator_jl_spark.functions.text import (
     _ALLOWED,
-    LANG_MARKERS,
     PUNCT_STRIP,
     STAT_SETS,
     STATS_FIELDS,
 )
+from datacurator_jl_spark.functions.tokens import distinct_pairs, lru_map, token_codes
 
 
 def _re2_class_escape(ch: str) -> str:
@@ -59,49 +56,44 @@ _STATS_TYPE = T.StructType(
 _SETS = {name: frozenset(ws) for name, ws in STAT_SETS.items()}
 _SET_LIST = list(_SETS.items())  # fixed order = STAT_SETS order
 _TBL = str.maketrans("", "", PUNCT_STRIP)
-# ASCII flag: match Java regex \s semantics exactly
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 #: token -> bitmask of set memberships (bit j = membership of the
 #: normalized token in _SET_LIST[j]); Zipfian web text makes this
 #: cache the dominant path, so per-token work collapses to one dict
-#: hit (the arrow_hash word-cache pattern, same cap + LRU eviction)
+#: hit (tokens.lru_map)
 _MEMBER_CACHE: dict[str, int] = {}
+
+
+def _member_mask(tok: str) -> int:
+    nu = tok.translate(_TBL)
+    m = 0
+    for j, (_, s) in enumerate(_SET_LIST):
+        if nu in s:
+            m |= 1 << j
+    return m
 
 
 def _token_stats_batch(texts: pd.Series) -> pd.DataFrame:
     """Round-7 shape (guide §4.2): Arrow-native tokenization +
-    dictionary encode over the batch's tokens, per-UNIQUE-token
-    normalization + set membership (cached across batches), and
-    C-speed ``bincount`` aggregations — replacing a per-row
-    ``re.findall`` + object ``explode`` + ``factorize`` (measured on
-    the 1M-doc corpus: tokenize+code 490 ms -> 61 ms per 20k-doc
-    batch) which itself replaced a ``groupby.nunique`` plus one
-    ``str.isin`` pass per stat set over every token occurrence.
-    Values are pinned identical: nw = token count, nd = distinct RAW
-    (lowercased) tokens, set counts = occurrences whose PUNCT_STRIP-
-    normalized form is a member.
-
-    Tokenizer parity (pinned by tests/test_whitespace_semantics +
-    the edge-case test): ``pc.ascii_split_whitespace`` splits on
-    exactly the 6 ASCII whitespace chars of ``re.ASCII \\S+`` and
-    collapses interior runs, but emits EMPTY strings at leading/
-    trailing boundaries (and [''] for an all-whitespace doc) — a real
-    ``\\S+`` match can never be empty, so dropping empty tokens
-    restores the exact match list. Lowercasing stays Python
-    ``str.lower`` (the pinned case semantics) — it is 9 ms of the
-    batch, not the cost center."""
+    dictionary encode over the batch's tokens (functions/tokens.py),
+    per-UNIQUE-token normalization + set membership (cached across
+    batches), and C-speed ``bincount`` aggregations — replacing a
+    per-row ``re.findall`` + object ``explode`` + ``factorize``
+    (measured on the 1M-doc corpus: tokenize+code 490 ms -> 61 ms per
+    20k-doc batch). Values are pinned identical: nw = token count, nd =
+    distinct RAW (lowercased) tokens, set counts = occurrences whose
+    PUNCT_STRIP-normalized form is a member."""
     n = len(texts)
     raw = texts.fillna("")
-    low = raw.str.lower()
     out = pd.DataFrame(index=texts.index, columns=list(STATS_FIELDS), data=0)
     # -- round-7 char/line stats over the RAW text (empty-string
     #    semantics for null; lowercasing can CHANGE length — e.g.
-    #    'İ'.lower() is two code points — so these never read ``low``).
-    #    One RE2 class count replaces each JVM translate re-scan; the
-    #    line-distinct count rides the same dictionary_encode + unique-
-    #    pair trick as ``nd``. Computed before the token early-return:
-    #    an all-whitespace batch still has nl=ndl=1 per doc.
+    #    'İ'.lower() is two code points — so these never read the
+    #    lowered text). One RE2 class count replaces each JVM translate
+    #    re-scan; the line-distinct count rides the same
+    #    dictionary_encode + unique-pair trick as ``nd``. Computed before
+    #    the token early-return: an all-whitespace batch still has
+    #    nl=ndl=1 per doc.
     arr_raw = pa.Array.from_pandas(raw)
     nchars = pa_compute.utf8_length(arr_raw).to_numpy(zero_copy_only=False)
     nws = pa_compute.count_substring_regex(
@@ -117,42 +109,17 @@ def _token_stats_batch(texts: pd.Series) -> pd.DataFrame:
     lenc = pa_compute.dictionary_encode(pa_compute.list_flatten(ln))
     lcodes = lenc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     lrows = np.repeat(np.arange(n, dtype=np.int64), llen)
-    luniq = len(lenc.dictionary)
-    lup = np.unique(lrows * luniq + lcodes)
-    out["ndl"] = np.bincount(lup // luniq, minlength=n)
+    lup, _ = distinct_pairs(lrows, lcodes, len(lenc.dictionary))
+    out["ndl"] = np.bincount(lup, minlength=n)
     # -- token stats over the LOWERED text
-    toks = pa_compute.ascii_split_whitespace(pa.Array.from_pandas(low))
-    flat = pa_compute.list_flatten(toks)
-    lens = pa_compute.list_value_length(toks).to_numpy(zero_copy_only=False)
-    rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-    nonempty = np.asarray(pa_compute.not_equal(flat, ""))
-    if not nonempty.all():
-        flat = flat.filter(pa.array(nonempty))
-        rows = rows[nonempty]
-    if len(flat) == 0:
+    rows, codes, uniques = token_codes(texts)
+    if not uniques:
         return out.astype("int32")
     out["nw"] = np.bincount(rows, minlength=n)
-    enc = pa_compute.dictionary_encode(flat)
-    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniques = enc.dictionary.to_pylist()
-    nuniq = len(uniques)
     # nd: distinct raw tokens per row = distinct (row, token-code) pairs
-    pairkey = rows.astype(np.int64) * nuniq + codes
-    up = np.unique(pairkey)
-    out["nd"] = np.bincount(up // nuniq, minlength=n)
-    _lru_evict(_MEMBER_CACHE)
-    masks = np.empty(nuniq, dtype=np.int64)
-    for i, u in enumerate(uniques):
-        m = _MEMBER_CACHE.get(u)
-        if m is None:
-            nu = u.translate(_TBL)
-            m = 0
-            for j, (_, s) in enumerate(_SET_LIST):
-                if nu in s:
-                    m |= 1 << j
-            if len(_MEMBER_CACHE) < _CACHE_CAP:
-                _MEMBER_CACHE[u] = m
-        masks[i] = m
+    up, _ = distinct_pairs(rows, codes, len(uniques))
+    out["nd"] = np.bincount(up, minlength=n)
+    masks = np.array(lru_map(_MEMBER_CACHE, uniques, _member_mask), dtype=np.int64)
     tok_masks = masks[codes]
     for j, (name, _) in enumerate(_SET_LIST):
         hit_rows = rows[(tok_masks >> j) & 1 == 1]

@@ -32,7 +32,7 @@ per-worker file load as in plans/stages._get_model).
 
 Scale shape: a narrow per-row projection — no shuffle, no collect. The
 Arrow path is one vectorized pandas stage per batch with a per-worker
-token->weight LRU (Zipfian hit rate, same valve as arrow_hash); the
+token->weight LRU (Zipfian hit rate, ``tokens.lru_map``); the
 native HOF twin is CodegenFallback and exists to pin values, not to run
 hot (functions/arrow_stats.py:3-9 measured pattern).
 """
@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import re
 
 import numpy as np
 import pandas as pd
@@ -49,12 +48,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacurator_jl_spark.functions.arrow_hash import _lru_evict, _lru_get
-from datacurator_jl_spark.functions.text import words
+from datacurator_jl_spark.functions import text as X
+from datacurator_jl_spark.functions.tokens import lru_map, token_codes, words
 
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)  # pinned: text.words semantics
-
-# (n_buckets, salt) -> {token: int weight}, LRU-bounded like arrow_hash
+# (n_buckets, salt) -> {token: int weight}, LRU-bounded (tokens.lru_map)
 _W_CACHES: dict[tuple[int, str], dict[str, int]] = {}
 
 
@@ -72,9 +69,7 @@ def classifier_score_py(
     text: str | None, n_buckets: int = 65536, salt: str = "qw1"
 ) -> float | None:
     """Per-row Python oracle twin of the stand-in score."""
-    if text is None:
-        return None
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = words(text)
     if not toks:
         return None
     s = sum(standin_weight(t, n_buckets, salt) for t in toks)
@@ -100,39 +95,34 @@ def linear_score_arrow(
 
     @F.pandas_udf(T.DoubleType())
     def _score(texts: pd.Series) -> pd.Series:
-        cache = _W_CACHES.setdefault((n_buckets, salt), {})
-        toks = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-        n = toks.str.len()
+        rows, codes, uniques = token_codes(texts)
         out = pd.Series(np.nan, index=texts.index, dtype="float64")
-        ex = toks.explode().dropna()
-        if ex.empty:
+        if not uniques:
             return out
-        codes, uniques = pd.factorize(ex)
+        n = np.bincount(rows, minlength=len(texts))
+        # per-doc sums in document order (float weights: the sum order is
+        # part of the value); groupby keys are batch positions
         if weights is None:
-            uw = np.empty(len(uniques), dtype=np.int64)
-            for ui, t in enumerate(uniques):
-                v = _lru_get(cache, t)
-                if v is None:
-                    v = standin_weight(t, n_buckets, salt)
-                    cache[t] = v
-                uw[ui] = v
-            _lru_evict(cache)
-            sums = (
-                pd.Series(uw[codes], index=ex.index).groupby(level=0).sum()
+            uw = np.array(
+                lru_map(
+                    _W_CACHES.setdefault((n_buckets, salt), {}),
+                    uniques,
+                    lambda t: standin_weight(t, n_buckets, salt),
+                ),
+                dtype=np.int64,
             )
-            out[sums.index] = sums / (1000.0 * n[sums.index])
+            sums = pd.Series(uw[codes]).groupby(rows).sum()
+            idx = sums.index.to_numpy()
+            out.iloc[idx] = sums.to_numpy() / (1000.0 * n[idx])
         else:
             buckets = np.fromiter(
                 (_h32_py(f"{t}#{salt}") % n_buckets for t in uniques),
                 dtype=np.int64,
                 count=len(uniques),
             )
-            sums = (
-                pd.Series(weights[buckets][codes], index=ex.index)
-                .groupby(level=0)
-                .sum()
-            )
-            out[sums.index] = bias + sums / n[sums.index]
+            sums = pd.Series(weights[buckets][codes]).groupby(rows).sum()
+            idx = sums.index.to_numpy()
+            out.iloc[idx] = bias + sums.to_numpy() / n[idx]
         # docs with zero tokens stay NaN -> null
         return out
 
@@ -147,7 +137,7 @@ def linear_score_native(
     path)."""
     from datacurator_jl_spark.operators.dedup import _h32
 
-    ws = words(F.lower(col))
+    ws = X.words(F.lower(col))
     wt = F.transform(
         ws,
         lambda t: _h32(

@@ -72,17 +72,3 @@ def contains_pii(text: Column) -> Column:
 
 def contains_toxicity(text: Column) -> Column:
     return F.lower(text).rlike(TOXICITY_PATTERN)
-
-
-def scrub_pii_pandas(s):
-    """Pure-pandas oracle of ``scrub_pii`` (same patterns, Python ``re``).
-
-    Used only in tests to assert byte-identical output between the Spark
-    path and an independent implementation.
-    """
-    import re
-
-    out = s
-    for _name, pat, repl in SCRUB_RULES:
-        out = out.str.replace(re.compile(pat), repl.replace("\\", "\\\\"), regex=True)
-    return out

@@ -60,8 +60,8 @@ def n_chars(text: Column) -> Column:
 def words(text: Column) -> Column:
     r"""Whitespace tokenization: EXACTLY the ``\S+`` match list.
 
-    Pinned across all four implementations (this JVM expr, the Arrow twin's
-    ``re.findall(r"\S+")``, the Python oracle, DuckDB
+    Pinned across all four implementations (this JVM expr, the Python
+    twin in functions/tokens.py, the Python oracle, DuckDB
     ``regexp_extract_all(text, '\S+')``). NB ``F.trim`` strips only the
     space character — it is NOT whitespace-trim and must never be used for
     token/has-text semantics (round-1 fuzz divergence on "\n").
@@ -76,21 +76,17 @@ def words(text: Column) -> Column:
     return F.array_remove(F.split(text, r"\s+"), "")
 
 
-def n_words(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def n_words(text: Column, stats: Column | None = None) -> Column:
     if stats is not None:
         return stats.getField("nw")
-    return F.size(words(text) if w is None else w)
+    return F.size(words(text))
 
 
 def n_lines(text: Column) -> Column:
     return F.size(F.split(text, r"\n"))
 
 
-def mean_word_length(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def mean_word_length(text: Column, stats: Column | None = None) -> Column:
     """Average token length; null for empty docs.
 
     Computed as (non-whitespace chars) / (word count) — mathematically
@@ -98,7 +94,7 @@ def mean_word_length(
     the whitespace), but avoids a higher-order aggregate: HOF expressions
     are CodegenFallback and knock the whole projection out of whole-stage
     codegen."""
-    nw = n_words(text, w, stats)
+    nw = n_words(text, stats)
     if stats is not None:
         # round-7: the shared struct already counted non-ws chars
         # (``ncnw``); null text has nw=0 so the branch below yields
@@ -109,22 +105,16 @@ def mean_word_length(
     return F.when(nw > 0, total.cast("double") / nw)
 
 
-def distinct_word_ratio(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def distinct_word_ratio(text: Column, stats: Column | None = None) -> Column:
     """|distinct lowercase words| / |words|; 1.0 for empty docs.
 
-    Low values = repeated-word spam (Gopher repetition rule).
-
-    ``w``, when given, must be the LOWERCASED words array (the engine
-    pre-projects words over lower(text)); this keeps the expression free
-    of per-element lambdas so the projection stays codegen-eligible."""
+    Low values = repeated-word spam (Gopher repetition rule)."""
     if stats is not None:
         nw = stats.getField("nw")
         return F.when(
             nw > 0, stats.getField("nd").cast("double") / nw
         ).otherwise(F.lit(1.0))
-    w = words(F.lower(text)) if w is None else w
+    w = words(F.lower(text))
     nw = F.size(w)
     return F.when(nw > 0, F.size(F.array_distinct(w)).cast("double") / nw).otherwise(
         F.lit(1.0)
@@ -226,9 +216,8 @@ PUNCT_STRIP = ".,;:!?\"'()[]"
 STAT_SETS: dict[str, list[str]] = {"sw": EN_STOPWORDS, **LANG_MARKERS}
 
 
-def norm_tokens(text: Column, w: Column | None = None) -> Column:
-    w = words(text) if w is None else w
-    return F.transform(w, lambda x: F.translate(F.lower(x), PUNCT_STRIP, ""))
+def norm_tokens(text: Column) -> Column:
+    return F.transform(words(text), lambda x: F.translate(F.lower(x), PUNCT_STRIP, ""))
 
 
 #: struct fields: word count, distinct words, set counts, then the
@@ -242,17 +231,17 @@ def norm_tokens(text: Column, w: Column | None = None) -> Column:
 STATS_FIELDS = ("nw", "nd", *STAT_SETS, "ncnw", "nl", "ndl", "nsym")
 
 
-def token_stats(text: Column, w: Column | None = None) -> Column:
+def token_stats(text: Column) -> Column:
     """struct(nw, nd, sw, en, de, fr, es, it): word count, distinct
     lowercase word count, and set-membership counts over normalized
-    tokens. Engine pre-projects this (or its Arrow twin) as ONE shared
-    column so every word-derived rule reads struct fields.
+    tokens. The engine pre-projects its Arrow twin
+    (functions/arrow_stats.py) as ONE shared column so every
+    word-derived rule reads struct fields; this JVM fold backs direct
+    expressions and pins the twin's values.
 
-    ``w``, when given, must be the LOWERCASED words array.
     Null text yields the ZERO struct (not null) — pinned to match the
     Arrow twin (functions/arrow_stats.py)."""
-    w = words(F.lower(text)) if w is None else w
-    w = F.coalesce(w, F.array().cast("array<string>"))
+    w = F.coalesce(words(F.lower(text)), F.array().cast("array<string>"))
     nt = F.transform(w, lambda x: F.translate(x, PUNCT_STRIP, ""))
     zero = F.struct(*[F.lit(0).alias(c) for c in STAT_SETS])
 
@@ -286,17 +275,15 @@ def stopword_hits(text: Column, stats: Column | None = None) -> Column:
     return s.getField("sw")
 
 
-def stopword_ratio(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def stopword_ratio(text: Column, stats: Column | None = None) -> Column:
     """English stop-word tokens / word count; 0.0 for empty docs."""
     hits = stopword_hits(text, stats)
-    nw = n_words(text, w, stats)
+    nw = n_words(text, stats)
     return F.when(nw > 0, hits.cast("double") / nw).otherwise(F.lit(0.0))
 
 
-def max_word_length(text: Column, w: Column | None = None) -> Column:
-    w = words(text) if w is None else w
+def max_word_length(text: Column) -> Column:
+    w = words(text)
     return F.when(
         F.size(w) > 0,
         F.array_max(F.transform(w, lambda x: F.length(x))),
@@ -350,12 +337,10 @@ def cjk_score(text: Column) -> Column:
     return (cjk / F.lit(4)).cast("int")
 
 
-def _lang_score_cols(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> dict[str, Column]:
+def _lang_score_cols(text: Column, stats: Column | None = None) -> dict[str, Column]:
     """Language -> integer score: marker-token counts from the (possibly
     pre-projected) token_stats struct; zh from the CJK character ratio."""
-    s = token_stats(text, w) if stats is None else stats
+    s = token_stats(text) if stats is None else stats
     scores = {k: s.getField(k) for k in LANG_MARKERS}
     scores["zh"] = cjk_score(text)
     return scores
@@ -364,26 +349,22 @@ def _lang_score_cols(
 LANG_ORDER = [*LANG_MARKERS, "zh"]  # fixed tie-break order
 
 
-def lang_scores(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def lang_scores(text: Column, stats: Column | None = None) -> Column:
     """Map of language -> score."""
-    scores = _lang_score_cols(text, w, stats)
+    scores = _lang_score_cols(text, stats)
     return F.map_from_arrays(
         F.array(*[F.lit(k) for k in LANG_ORDER]),
         F.array(*[scores[k] for k in LANG_ORDER]),
     )
 
 
-def lang_id(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def lang_id(text: Column, stats: Column | None = None) -> Column:
     """argmax language by score; 'und' (undetermined) when all zero.
 
     Ties break by the fixed LANG_ORDER (deterministic — SURVEY.md §7.4
     requires documented tie-breaking).
     """
-    counts = _lang_score_cols(text, w, stats)
+    counts = _lang_score_cols(text, stats)
     best = F.greatest(*counts.values())
     expr = F.lit("und")
     # build reversed when-chain so earlier languages win ties
@@ -392,10 +373,8 @@ def lang_id(
     return expr
 
 
-def lang_top_score(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
-    return F.greatest(*_lang_score_cols(text, w, stats).values())
+def lang_top_score(text: Column, stats: Column | None = None) -> Column:
+    return F.greatest(*_lang_score_cols(text, stats).values())
 
 
 # ---------------------------------------------------------------------------
@@ -405,15 +384,13 @@ def lang_top_score(
 # ---------------------------------------------------------------------------
 
 
-def perplexity_proxy(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def perplexity_proxy(text: Column, stats: Column | None = None) -> Column:
     """Lower = more natural text. Combines stopword density, word-length
     shape and repetition into one score in [0, ~10]. Deterministic.
     """
-    sw = stopword_ratio(text, w, stats)
-    mwl = F.coalesce(mean_word_length(text, w, stats), F.lit(0.0))
-    rep = distinct_word_ratio(text, w, stats)
+    sw = stopword_ratio(text, stats)
+    mwl = F.coalesce(mean_word_length(text, stats), F.lit(0.0))
+    rep = distinct_word_ratio(text, stats)
     sym = symbol_ratio(text, stats)
     # natural English: sw ~0.3-0.6, mwl ~4-6, rep high, sym ~0
     return (
@@ -442,14 +419,12 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def quality_score(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def quality_score(text: Column, stats: Column | None = None) -> Column:
     """Composite quality in [0,1], higher = better. Weighted, deterministic
     blend of the heuristics — a native stand-in for a learned quality model.
     """
-    sw = F.least(stopword_ratio(text, w, stats) * F.lit(2.5), F.lit(1.0))
-    rep = distinct_word_ratio(text, w, stats)
+    sw = F.least(stopword_ratio(text, stats) * F.lit(2.5), F.lit(1.0))
+    rep = distinct_word_ratio(text, stats)
     sym = F.lit(1.0) - F.least(symbol_ratio(text, stats) * F.lit(5.0), F.lit(1.0))
     alpha = alpha_ratio(text)
     return (sw * F.lit(0.35) + rep * F.lit(0.25) + sym * F.lit(0.2) + alpha * F.lit(0.2))

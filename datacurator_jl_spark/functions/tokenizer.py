@@ -30,19 +30,15 @@ the pipeline.
 from __future__ import annotations
 
 import os
-import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.text import token_count as _native_token_count
-
-# pinned repo-wide ASCII \S+ word split (CLAUDE.md invariant) — the
-# fixture tokenizer segments within these words, like a real BPE's
-# pre-tokenizer does
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import token_codes
 
 # per-python-worker tokenizer cache: spec -> loaded counter
 _WORKER_TOKENIZERS: dict[str, object] = {}
@@ -91,11 +87,14 @@ class JsonVocabTokenizer:
         return n
 
     def count_batch(self, texts: pd.Series) -> pd.Series:
-        toks = texts.str.findall(_TOKEN_RE)
-        return toks.map(
-            lambda ws: sum(self._count_word(w) for w in ws),
-            na_action="ignore",
-        ).astype("Int64")  # null text -> null count (matches the native expr)
+        # the pinned ASCII \S+ words (case kept) are the pre-tokenizer;
+        # pieces are counted once per batch-unique word
+        rows, codes, uniques = token_codes(texts, lower=False)
+        per_word = np.array([self._count_word(w) for w in uniques], dtype=np.int64)
+        counts = np.bincount(rows, per_word[codes], minlength=len(texts))
+        out = pd.Series(counts.astype(np.int64), index=texts.index, dtype="Int64")
+        # null text -> null count (matches the native expr)
+        return out.mask(texts.isna().to_numpy())
 
 
 class TiktokenCounter:  # pragma: no cover - tiktoken not in this container

@@ -29,15 +29,12 @@ the broadcast set.
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import words
 
 
 def word_ngrams(text: Column, n: int) -> Column:
@@ -72,10 +69,7 @@ def word_ngrams_arrow(text: Column, n: int, distinct: bool = False) -> Column:
     def batch(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            if not isinstance(t, str):
-                out.append([])
-                continue
-            toks = _TOKEN_RE.findall(t.lower())
+            toks = words(t)
             if len(toks) < n:
                 out.append([])
                 continue

@@ -68,34 +68,30 @@ from __future__ import annotations
 
 from collections import Counter
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.classifier import _h32_py
+from datacurator_jl_spark.functions.tokens import lru_map, token_codes, words
 from datacurator_jl_spark.operators.dedup import (
     _materialize,
     _materialize_spread,
     _round_away,
 )
-from datacurator_jl_spark.operators.dsir import _TOKEN_RE
 
 
 def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
     """Per-row Python mirror of the unigram feature extraction (also the
     tests' independent oracle)."""
-    if not isinstance(text, str):
-        return Counter()
-    return Counter(
-        _h32_py(f"{t}#{salt}") % n_buckets
-        for t in _TOKEN_RE.findall(text.lower())
-    )
+    return Counter(_h32_py(f"{t}#{salt}") % n_buckets for t in words(text))
 
 
-#: (n_buckets, salt) -> token -> bucket id, shared across batches (the
-#: classifier/arrow_hash worker-cache pattern: Zipfian vocabulary makes
-#: the md5 run only for batch-NEW tokens)
+#: (n_buckets, salt) -> token -> bucket id, shared across batches
+#: (tokens.lru_map: Zipfian vocabulary makes the md5 run only for
+#: batch-NEW tokens)
 _B_CACHES: dict[tuple[int, str], dict[str, int]] = {}
 
 
@@ -106,7 +102,8 @@ def unigram_buckets_arrow(
     ONE Arrow pass, counts collapsed per doc inside the batch (the dsir
     bigram builder's unigram twin, classifier bucket function).
 
-    Round-7 kernel (guide §4.2): factorize the batch's tokens once,
+    Round-7 kernel (guide §4.2): code the batch's tokens once
+    (functions/tokens.py),
     md5-bucket per UNIQUE token (cached across batches), count per
     (row, bucket) with one ``np.unique`` — replacing a per-doc Python
     Counter that re-hashed every token OCCURRENCE. Values identical
@@ -115,31 +112,21 @@ def unigram_buckets_arrow(
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
 
     def batch(texts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from datacurator_jl_spark.operators.dsir import _TOKEN_RE as TR
-
-        cache = _B_CACHES.setdefault((n_buckets, salt), {})
-        n = len(texts)
-        toks = texts.fillna("").str.lower().str.findall(TR)
-        ex = toks.explode().dropna()
-        out_lists: list = [[] for _ in range(n)]
-        if not ex.empty:
-            rows = texts.index.get_indexer(ex.index)
-            codes, uniques = pd.factorize(ex.to_numpy())
-            bks = np.empty(len(uniques), dtype=np.int64)
-            for i, u in enumerate(uniques):
-                b = cache.get(u)
-                if b is None:
-                    b = _h32_py(f"{u}#{salt}") % n_buckets
-                    cache[u] = b
-                bks[i] = b
-            key = rows.astype(np.int64) * n_buckets + bks[codes]
+        rows, codes, uniques = token_codes(texts)
+        out_lists: list = [[] for _ in range(len(texts))]
+        if uniques:
+            bks = np.array(
+                lru_map(
+                    _B_CACHES.setdefault((n_buckets, salt), {}),
+                    uniques,
+                    lambda u: _h32_py(f"{u}#{salt}") % n_buckets,
+                ),
+                dtype=np.int64,
+            )
+            key = rows * n_buckets + bks[codes]
             uk, cnt = np.unique(key, return_counts=True)
             for k, c in zip(uk.tolist(), cnt.tolist()):
-                out_lists[k // n_buckets].append(
-                    {"b": k % n_buckets, "c": c}
-                )
+                out_lists[k // n_buckets].append({"b": k % n_buckets, "c": c})
         return pd.Series(out_lists, index=texts.index)
 
     schema = T.ArrayType(

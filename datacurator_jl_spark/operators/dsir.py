@@ -51,7 +51,6 @@ function, no driver collect.
 from __future__ import annotations
 
 import hashlib
-import re
 from collections import Counter
 
 import pandas as pd
@@ -59,10 +58,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import _lru_evict, _lru_get, words
 from datacurator_jl_spark.operators.dedup import _materialize
-
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 _BUCKET_CACHE: dict[str, int] = {}
 
@@ -71,10 +68,8 @@ def _bucket(gram: str, salt: str, n_buckets: int) -> int:
     """Per-gram mirror of the pinned bucket hash (also the tests'
     independent oracle). The cache is keyed on (salt, gram) and holds
     the UN-modded hash, so any (salt, n_buckets) stage shares hits; the
-    smooth LRU eviction is the arrow_hash doctrine (clear-all drops the
-    whole Zipf head at once — round-2 lesson)."""
-    from datacurator_jl_spark.functions.arrow_hash import _lru_evict, _lru_get
-
+    smooth LRU eviction is the functions/tokens.py doctrine (clear-all
+    drops the whole Zipf head at once — round-2 lesson)."""
     key = salt + "\x00" + gram
     v = _lru_get(_BUCKET_CACHE, key)
     if v is None:
@@ -87,9 +82,7 @@ def _bucket(gram: str, salt: str, n_buckets: int) -> int:
 
 
 def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
-    if not isinstance(text, str):
-        return Counter()
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = words(text)
     return Counter(
         _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets)
         for i in range(len(toks) - 1)

@@ -54,15 +54,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import words
 from datacurator_jl_spark.operators.dedup import _materialize
-from datacurator_jl_spark.operators.dsir import _TOKEN_RE, _bucket
+from datacurator_jl_spark.operators.dsir import _bucket
 
 
 def _doc_events(text, salt: str, n_buckets: int) -> Counter:
     """Per-row Python mirror: Counter of (b2, b1) event buckets."""
-    if not isinstance(text, str):
-        return Counter()
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = words(text)
     return Counter(
         (
             _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets),

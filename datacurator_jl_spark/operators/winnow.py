@@ -45,7 +45,6 @@ and the cap drops the degenerate KEY, not the corpus.
 from __future__ import annotations
 
 import hashlib
-import re
 
 import numpy as np
 import pandas as pd
@@ -53,11 +52,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import words
 from datacurator_jl_spark.operators.dedup import _drop_over_cap, _materialize
 from datacurator_jl_spark.operators.dataframe_ops import validate_unique_ids
-
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 
 def _winnow_one(toks: list[str], k: int, w: int) -> list[int]:
@@ -91,13 +88,9 @@ def winnow_fingerprints_arrow(text: Column, k: int = 3, w: int = 4) -> Column:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
 
     def batch(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if not isinstance(t, str):
-                out.append([])
-                continue
-            out.append(_winnow_one(_TOKEN_RE.findall(t.lower()), k, w))
-        return pd.Series(out, index=texts.index)
+        return pd.Series(
+            [_winnow_one(words(t), k, w) for t in texts], index=texts.index
+        )
 
     udf = F.pandas_udf(batch, returnType=T.ArrayType(T.LongType()))
     return udf(text)

@@ -24,17 +24,17 @@ thing in production; nothing else changes.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# pinned tokenization for every model stand-in/fixture: ASCII \S+
+# every model stand-in/fixture tokenizes with the pinned ASCII \S+ split
 # (CLAUDE.md invariant — str.split() would add unicode whitespace splits)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import lru_map, token_codes
 
 # per-python-worker model cache: loader id -> loaded model
 _WORKER_MODELS: dict[str, object] = {}
@@ -48,9 +48,21 @@ def _get_model(key: str, loader: Callable[[], object]) -> object:
     return model
 
 
+def _mean_per_doc(
+    texts: pd.Series, rows: np.ndarray, codes: np.ndarray, scores: np.ndarray
+) -> pd.Series:
+    """Mean per-token score of each doc, summed in document order; 1e6
+    for a doc without tokens."""
+    out = pd.Series(1e6, index=texts.index, dtype="float64")
+    if len(rows):
+        means = pd.Series(scores[codes]).groupby(rows).mean()
+        out.iloc[means.index.to_numpy()] = means.to_numpy()
+    return out
+
+
 class FakeLangModel:
-    """Deterministic fastText stand-in: marker-token voting implemented
-    with vectorized pandas str ops (mirrors functions.text.LANG_MARKERS
+    """Deterministic fastText stand-in: marker-token voting over the
+    batch's token codes (mirrors functions.text.LANG_MARKERS
     semantics loosely; the REAL contract tested is the stage plumbing)."""
 
     def __init__(self):
@@ -59,13 +71,12 @@ class FakeLangModel:
         self.markers = {k: set(ws) for k, ws in LANG_MARKERS.items()}
 
     def predict_batch(self, texts: pd.Series) -> pd.DataFrame:
-        # pinned repo-wide ASCII \S+ tokenization (CLAUDE.md invariant)
-        toks = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-        counts = {
-            k: toks.map(lambda ws, s=s: sum(1 for w in ws if w in s))
-            for k, s in self.markers.items()
-        }
-        df = pd.DataFrame(counts)
+        rows, codes, uniques = token_codes(texts)
+        counts = {}
+        for k, s in self.markers.items():
+            hit = np.array([u in s for u in uniques], dtype=bool)
+            counts[k] = np.bincount(rows[hit[codes]], minlength=len(texts))
+        df = pd.DataFrame(counts, index=texts.index)
         best = df.max(axis=1)
         lang = df.idxmax(axis=1).where(best > 0, "und")
         total = df.sum(axis=1)
@@ -77,36 +88,23 @@ class FakePerplexityModel:
     """Deterministic KenLM stand-in: pseudo-logprob = mean of a
     hash-derived per-word score (stable across workers/runs).
 
-    Vectorized like a real scorer would be: explode + factorize, python
-    only over batch-UNIQUE words (amortized by a vocab cache), C-speed
+    Vectorized like a real scorer would be: token codes, python only
+    over batch-UNIQUE words (amortized by a vocab cache), C-speed
     groupby mean — so the stage's cost honestly represents the batched
     cost model the planner orders stages by."""
 
     _CACHE: dict[str, float] = {}
 
-    def score_batch(self, texts: pd.Series) -> pd.Series:
+    @staticmethod
+    def _word_score(w: str) -> float:
         import hashlib
 
-        import numpy as np
+        return float(int(hashlib.md5(w.encode()).hexdigest()[:4], 16) % 1000)
 
-        if len(self._CACHE) > 4_000_000:  # pragma: no cover - safety valve
-            self._CACHE.clear()
-        toks = texts.fillna("").str.findall(_TOKEN_RE)
-        ex = toks.explode().dropna()
-        out = pd.Series(1e6, index=texts.index, dtype="float64")  # empty doc
-        if ex.empty:
-            return out
-        codes, uniques = pd.factorize(ex)
-        scores = np.empty(len(uniques), dtype=np.float64)
-        for ui, w in enumerate(uniques):
-            v = self._CACHE.get(w)
-            if v is None:
-                v = float(int(hashlib.md5(w.encode()).hexdigest()[:4], 16) % 1000)
-                self._CACHE[w] = v
-            scores[ui] = v
-        means = pd.Series(scores[codes], index=ex.index).groupby(level=0).mean()
-        out[means.index] = means
-        return out
+    def score_batch(self, texts: pd.Series) -> pd.Series:
+        rows, codes, uniques = token_codes(texts, lower=False)
+        scores = np.array(lru_map(self._CACHE, uniques, self._word_score))
+        return _mean_per_doc(texts, rows, codes, scores)
 
 
 class JsonMarkerLangModel:
@@ -140,14 +138,9 @@ class JsonPerplexityModel:
         self.unk = float(spec.get("unk", 1e6))
 
     def score_batch(self, texts: pd.Series) -> pd.Series:
-        toks = texts.fillna("").str.findall(_TOKEN_RE)
-        ex = toks.explode().dropna()
-        out = pd.Series(1e6, index=texts.index, dtype="float64")  # empty doc
-        if ex.empty:
-            return out
-        means = ex.map(self.words).fillna(self.unk).groupby(level=0).mean()
-        out[means.index] = means
-        return out
+        rows, codes, uniques = token_codes(texts, lower=False)
+        scores = pd.Series(uniques, dtype=object).map(self.words).fillna(self.unk)
+        return _mean_per_doc(texts, rows, codes, scores.to_numpy(dtype=np.float64))
 
 
 class FastTextAdapter:  # pragma: no cover - fasttext not in this environment
@@ -227,22 +220,6 @@ def load_perplexity_model(model_path: str | None = None) -> object:
             "kenlm package"
         ) from e
     return KenLMAdapter(kenlm.Model(path))  # pragma: no cover
-
-
-def load_fasttext_or_fake(model_path: str | None = None) -> object:
-    """Back-compat entry with the ORIGINAL contract: real fastText
-    whenever the package is importable (default model ``lid.176.bin``),
-    else fall through to the path-contract resolution (env fixture or
-    deterministic stand-in). ``.json`` paths always mean the fixture
-    format."""
-    if model_path is None or not model_path.endswith(".json"):
-        try:  # pragma: no cover - lib not in this environment
-            import fasttext  # type: ignore
-
-            return FastTextAdapter(fasttext.load_model(model_path or "lid.176.bin"))
-        except ImportError:
-            pass
-    return load_langid_model(model_path)
 
 
 @dataclass

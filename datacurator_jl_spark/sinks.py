@@ -18,6 +18,7 @@ never materializes text).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -406,8 +407,6 @@ def _write_outputs_inner(result, output_dir, input_path, p, paths):
     elif mode == "inplace":
         if not input_path:
             raise ValueError("write_mode=inplace requires the input path")
-        import shutil
-
         src = input_path.rstrip("/")
         tmp, old = src + ".dc_inplace_tmp", src + ".dc_inplace_old"
         # materialize BEFORE touching the source (Spark cannot overwrite a
@@ -446,6 +445,17 @@ def write_bucketed_table(
     transform)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    if mode == "overwrite":
+        # a table dir can outlive its metastore entry (fresh derby per
+        # session); an orphaned location makes saveAsTable refuse
+        spark = df.sparkSession
+        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+        wh = spark.conf.get("spark.sql.warehouse.dir", "")
+        if wh:
+            shutil.rmtree(
+                os.path.join(wh.removeprefix("file:"), table.lower()),
+                ignore_errors=True,
+            )
     w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)

@@ -239,35 +239,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() entry points."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a BUCKETED table (hash-bucketed by ``bucket_col``,
-    optionally sorted within buckets): two tables bucketed the same way
-    join WITHOUT a shuffle (SortMergeJoin reads co-located buckets; zero
-    Exchange in the plan — pinned by tests/test_plans.py). This is the
-    parquet/metastore analogue of Iceberg's ``bucket(N, key)`` partition
-    transform — the co-location strategy for the repeated big-big joins
-    (docs x signatures, docs x scores) a 100 TB curation pipeline runs
-    daily. Requires a session with a warehouse dir (any default local or
-    cluster metastore works)."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
-    # a table dir can outlive its metastore entry (fresh derby per
-    # session); an orphaned location makes saveAsTable refuse
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh:
-        import shutil
-
-        local = wh.removeprefix("file:")
-        shutil.rmtree(os.path.join(local, table_name.lower()), ignore_errors=True)
-    w = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)

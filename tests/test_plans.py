@@ -71,13 +71,13 @@ def test_minhash_arrow_udf_evaluated_once(spark):
 
 def test_bucketed_join_has_no_shuffle(spark, docs_df, tmp_path):
     """Two tables bucketed on the join key join with ZERO Exchange —
-    the co-location contract write_bucketed exists for."""
-    from datacurator_jl_spark.sources.tables import write_bucketed
+    the co-location contract write_bucketed_table exists for."""
+    from datacurator_jl_spark.sinks import write_bucketed_table
 
     left = docs_df.select("url", "text")
     right = docs_df.select("url", F.length("text").alias("n"))
-    write_bucketed(left, "t_bleft", "url", num_buckets=8)
-    write_bucketed(right, "t_bright", "url", num_buckets=8)
+    write_bucketed_table(left, "t_bleft", "url", n_buckets=8)
+    write_bucketed_table(right, "t_bright", "url", n_buckets=8)
     # disable broadcast so the planner exercises the big-big (SMJ) path —
     # the regime bucketing exists for; tiny test tables would otherwise
     # broadcast and bypass bucket co-location entirely

@@ -362,8 +362,9 @@ def test_arrow_hash_lru_eviction(monkeypatch):
     clear-all valve: recently-USED words survive an overflow, values are
     identical before and after re-derivation."""
     from datacurator_jl_spark.functions import arrow_hash as AH
+    from datacurator_jl_spark.functions import tokens
 
-    monkeypatch.setattr(AH, "_CACHE_CAP", 10)
+    monkeypatch.setattr(tokens, "_CACHE_CAP", 10)
     AH._MH_CACHES.pop(3, None)
     sig1 = AH._minhash_batch(pd.Series([" ".join(f"w{i}" for i in range(12))]), 3)
     cache = AH._MH_CACHES[3]

@@ -176,14 +176,15 @@ def test_bucket_star_edges_components_match_pairwise(spark):
 
 
 def test_arrow_stats_tokenizer_parity_reference():
-    """The round-7 Arrow tokenization inside _token_stats_batch
-    (ascii_split_whitespace + empty-token drop + dictionary_encode)
-    must produce the EXACT per-row stats of a re.ASCII \\S+ findall
-    reference -- including the boundary cases where Arrow's splitter
-    emits empty strings (leading/trailing whitespace, all-whitespace
-    docs), the chars Python's ASCII \\s excludes (\\x00, \\x1c-\\x1f,
-    \\x85, \\xa0, U+2028), and the round-7 char/line fields (ncnw/nl/
-    ndl/nsym) against char-by-char references."""
+    """The Arrow tokenization behind _token_stats_batch
+    (functions/tokens.token_codes: ascii_split_whitespace + empty-token
+    drop + dictionary_encode) must produce the EXACT per-row stats of a
+    re.ASCII \\S+ findall reference -- including the boundary cases
+    where Arrow's splitter emits empty strings (leading/trailing
+    whitespace, all-whitespace docs), the chars Python's ASCII \\s
+    excludes (\\x00, \\x1c-\\x1f, \\x85, \\xa0, U+2028), and the
+    round-7 char/line fields (ncnw/nl/ndl/nsym) against char-by-char
+    references."""
     import re
 
     import pandas as pd
@@ -228,9 +229,9 @@ def test_arrow_stats_tokenizer_parity_reference():
 
 
 def test_arrow_hash_tokenizer_parity_reference():
-    """The round-7 Arrow tokenization inside _distinct_token_codes
-    (shared by the minhash and simhash batch kernels) must produce
-    signatures EXACTLY equal to the re.ASCII \\S+ findall +
+    """The Arrow tokenization of functions/tokens.py (token_codes +
+    distinct_pairs, behind the minhash and simhash batch kernels) must
+    produce signatures EXACTLY equal to the re.ASCII \\S+ findall +
     explode + drop_duplicates shape it replaced, including boundary
     whitespace, null text, and the non-ASCII-\\s chars."""
     import re
@@ -291,3 +292,13 @@ def test_arrow_hash_tokenizer_parity_reference():
     ])
     assert AH._minhash_batch(cases, 4).equals(ref_minhash(cases, 4))
     assert AH._simhash_batch(cases, 16).equals(ref_simhash(cases, 16))
+    # hashed word sets: distinct _h32 values in first-occurrence order,
+    # null text -> null, no tokens -> []
+    ref_sets = [
+        None if t is None else list(dict.fromkeys(
+            AH._md5_prefix_int(w.encode("utf-8"), 8)
+            for w in rx.findall(t.lower())
+        ))
+        for t in cases
+    ]
+    assert AH._h32_wordset_batch(cases).tolist() == ref_sets

@@ -13,11 +13,17 @@ examples — change one, change all four (CLAUDE.md invariant).
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import duckdb
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from datacurator_jl_spark.functions import text as X
+from datacurator_jl_spark.functions import tokens
 from datacurator_jl_spark.functions.arrow_stats import _token_stats_batch
 from datacurator_jl_spark.testing import oracle as O
 
@@ -27,6 +33,13 @@ from datacurator_jl_spark.testing import oracle as O
 # out explicitly instead of using \s/\S (round-2 review finding).
 CASES = ["\n", "\nfoo", "\tbar ", " . ", "\t", "", "  ", "a b", "x\n\ny",
          "\tthe fox", "the and of", "\x0b", "a\x0bb", None]
+
+# round-7 edge list: chars Python's ASCII \s excludes (NUL, the \x1c-\x1f
+# separators, NEL, NBSP, U+2028), a case mapping that changes length
+# ('İ'.lower() is two code points), all-whitespace docs, null
+EDGE = ["\x00", "nul\x00 \x00also \x00", "\x1c\x1d\x1e\x1f", "a\x1cb c",
+        "p\x85q", "x\xa0y z", "mixed \u2028 line", "\u0130 li\u0307ne \u0130",
+        " \t\n\x0b\x0c\r ", "\v lone \f", "The THE the the", None]
 
 
 def _spark_tok(spark, texts):
@@ -140,3 +153,46 @@ def test_fuzz_falsifying_example_labels(spark, flagship_spec):
     exp = oracle_labels(pdf, flagship_spec).sort_values("url").reset_index(drop=True)
     assert list(got["dc_kept"]) == list(exp["keep"])
     assert list(got["dc_rule_id"]) == list(exp["rule_id"])
+
+
+@pytest.mark.parametrize("lower", [True, False])
+def test_tokens_match_ascii_findall(lower):
+    """functions/tokens.py — occurrence codes, distinct codes and
+    ``words()`` — equal the ``re.ASCII \\S+`` findall list, null text
+    having no tokens."""
+    rx = re.compile(r"\S+", re.ASCII)
+    texts = pd.Series(CASES + EDGE)
+    ref = [rx.findall((t or "").lower() if lower else (t or "")) for t in texts]
+
+    rows, codes, uniques = tokens.token_codes(texts, lower=lower)
+    assert len(set(uniques)) == len(uniques)
+    got: list[list[str]] = [[] for _ in texts]
+    for r, c in zip(rows.tolist(), codes.tolist()):
+        got[r].append(uniques[c])
+    assert got == ref
+
+    drows, dcodes = tokens.distinct_pairs(rows, codes, len(uniques))
+    pairs = [(r, uniques[c]) for r, c in zip(drows.tolist(), dcodes.tolist())]
+    assert pairs == sorted(pairs, key=lambda p: (p[0], uniques.index(p[1])))
+    assert set(pairs) == {(i, w) for i, ws in enumerate(ref) for w in ws}
+    assert len(pairs) == len(set(pairs))
+
+    assert [tokens.words(t, lower=lower) for t in texts] == ref
+
+
+def test_one_token_regex_in_package():
+    """The package spells the ``\\S+`` token regex exactly once, in
+    functions/tokens.py; every other kernel imports it from there
+    (testing/oracle.py keeps its own as the independent reference)."""
+    pkg = Path(tokens.__file__).resolve().parents[1]
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "testing/oracle.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and any(
+                isinstance(a, ast.Constant) and a.value == r"\S+" for a in node.args
+            ):
+                sites.append((rel, ast.unparse(node.func)))
+    assert sites == [("functions/tokens.py", "re.compile")], sites
