@@ -99,11 +99,8 @@ def linear_score_arrow(
         out = pd.Series(np.nan, index=texts.index, dtype="float64")
         if not uniques:
             return out
-        n = np.bincount(rows, minlength=len(texts))
-        # per-doc sums in document order (float weights: the sum order is
-        # part of the value); groupby keys are batch positions
         if weights is None:
-            uw = np.array(
+            per_tok = np.array(
                 lru_map(
                     _W_CACHES.setdefault((n_buckets, salt), {}),
                     uniques,
@@ -111,18 +108,22 @@ def linear_score_arrow(
                 ),
                 dtype=np.int64,
             )
-            sums = pd.Series(uw[codes]).groupby(rows).sum()
-            idx = sums.index.to_numpy()
-            out.iloc[idx] = sums.to_numpy() / (1000.0 * n[idx])
         else:
             buckets = np.fromiter(
                 (_h32_py(f"{t}#{salt}") % n_buckets for t in uniques),
                 dtype=np.int64,
                 count=len(uniques),
             )
-            sums = pd.Series(weights[buckets][codes]).groupby(rows).sum()
-            idx = sums.index.to_numpy()
-            out.iloc[idx] = bias + sums.to_numpy() / n[idx]
+            per_tok = weights[buckets]
+        # per-doc sums in document order (float weights: the sum order is
+        # part of the value); groupby keys are batch positions
+        sums = pd.Series(per_tok[codes]).groupby(rows).sum()
+        idx = sums.index.to_numpy()
+        n = np.bincount(rows, minlength=len(texts))[idx]
+        if weights is None:
+            out.iloc[idx] = sums.to_numpy() / (1000.0 * n)
+        else:
+            out.iloc[idx] = bias + sums.to_numpy() / n
         # docs with zero tokens stay NaN -> null
         return out
 
