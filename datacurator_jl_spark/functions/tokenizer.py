@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.text import token_count as _native_token_count
-from datacurator_jl_spark.functions.tokens import token_codes
+from datacurator_jl_spark.functions.tokens import lru_map, token_codes
 
 # per-python-worker tokenizer cache: spec -> loaded counter
 _WORKER_TOKENIZERS: dict[str, object] = {}
@@ -63,14 +63,12 @@ class JsonVocabTokenizer:
         vocab = list(spec["vocab"])
         self.vocab = set(vocab)
         self.max_len = max((len(v) for v in vocab), default=1)
-        # per-word piece-count memo: real corpora repeat words heavily,
-        # so the greedy scan runs once per distinct word per worker
+        # per-word piece-count memo (tokens.lru_map): real corpora repeat
+        # words heavily, so the greedy scan runs once per distinct word
+        # per worker
         self._memo: dict[str, int] = {}
 
-    def _count_word(self, w: str) -> int:
-        n = self._memo.get(w)
-        if n is not None:
-            return n
+    def _scan_word(self, w: str) -> int:
         i, n = 0, 0
         L = len(w)
         while i < L:
@@ -81,16 +79,15 @@ class JsonVocabTokenizer:
                     break
             i += step
             n += 1
-        if len(self._memo) > 2_000_000:  # pragma: no cover - safety valve
-            self._memo.clear()
-        self._memo[w] = n
         return n
 
     def count_batch(self, texts: pd.Series) -> pd.Series:
         # the pinned ASCII \S+ words (case kept) are the pre-tokenizer;
         # pieces are counted once per batch-unique word
         rows, codes, uniques = token_codes(texts, lower=False)
-        per_word = np.array([self._count_word(w) for w in uniques], dtype=np.int64)
+        per_word = np.array(
+            lru_map(self._memo, uniques, self._scan_word), dtype=np.int64
+        )
         counts = np.bincount(rows, per_word[codes], minlength=len(texts))
         out = pd.Series(counts.astype(np.int64), index=texts.index, dtype="Int64")
         # null text -> null count (matches the native expr)

@@ -6,7 +6,8 @@ Every Python-side kernel tokenizes through this module (the JVM twin is
 independent reference). Semantics: token = maximal run of chars outside
 the 6 ASCII whitespace chars ``[ \\t\\n\\x0b\\f\\r]`` (Java regex ``\\s``;
 ``\\x1c-\\x1f``, ``\\x85``, ``\\xa0``, U+2028 are NOT whitespace), over
-``str.lower(text)`` unless ``lower=False``; null text has no tokens.
+``str.lower(text)`` (the batch form can keep case with ``lower=False``);
+null text has no tokens.
 
 Two shapes:
 
@@ -36,11 +37,12 @@ _TOKEN_RE = re.compile(r"\S+", re.ASCII)
 _CACHE_CAP = 4_000_000  # per-worker memory bound per (fn, config) cache
 
 
-def words(t: str | None, lower: bool = True) -> list[str]:
-    """One document's ``\\S+`` tokens in order; ``[]`` for null text."""
+def words(t: str | None) -> list[str]:
+    """One document's lowercased ``\\S+`` tokens in order; ``[]`` for
+    null text."""
     if not isinstance(t, str):
         return []
-    return _TOKEN_RE.findall(t.lower() if lower else t)
+    return _TOKEN_RE.findall(t.lower())
 
 
 def token_codes(

@@ -445,11 +445,12 @@ def write_bucketed_table(
     transform)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if mode == "overwrite":
+    spark = df.sparkSession
+    if mode == "overwrite" and not spark.catalog.tableExists(table):
         # a table dir can outlive its metastore entry (fresh derby per
-        # session); an orphaned location makes saveAsTable refuse
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+        # session); an orphaned location makes saveAsTable refuse. A
+        # table the catalog knows is left to saveAsTable, which refuses
+        # to overwrite a table the write is reading from.
         wh = spark.conf.get("spark.sql.warehouse.dir", "")
         if wh:
             shutil.rmtree(

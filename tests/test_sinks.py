@@ -190,3 +190,26 @@ def test_bucketed_tables_join_without_exchange(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_a")
         spark.sql("DROP TABLE IF EXISTS bkt_b")
+
+
+def test_bucketed_table_overwrite_from_itself_is_refused(spark):
+    """Overwriting a standing bucketed table from a frame that reads it is
+    refused by Spark before any file is touched, so the table keeps its
+    rows; an overwrite from other data still replaces it."""
+    from pyspark.errors import AnalysisException
+
+    from datacurator_jl_spark.sinks import write_bucketed_table
+
+    def docs(n):
+        return spark.range(0, n).selectExpr("id AS doc")
+
+    write_bucketed_table(docs(100), "bkt_self", "doc", n_buckets=4)
+    try:
+        evens = spark.table("bkt_self").where("doc % 2 = 0")
+        with pytest.raises(AnalysisException, match="read from"):
+            write_bucketed_table(evens, "bkt_self", "doc", n_buckets=4)
+        assert spark.table("bkt_self").count() == 100
+        write_bucketed_table(docs(10), "bkt_self", "doc", n_buckets=4)
+        assert spark.table("bkt_self").count() == 10
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bkt_self")
